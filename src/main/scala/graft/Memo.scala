@@ -25,7 +25,24 @@ import org.apache.spark.sql.DataFrame
   * `spark.catalog.clearCache()` between timing passes so each pass re-does
   * the full training work. Within-pass sharing IS the measured shape —
   * train once, serve many — but cross-pass reuse would under-report
-  * (Bench.scala's cache-discipline note).
+  * (Bench.scala's cache-discipline note). It also empties the per-epoch
+  * side registries of other modules: [[Sizing]]'s row counts and
+  * [[Tables]]' inferred fixture schemas.
+  *
+  * Besides the trained tables, the near-dup SIGNATURE CHAIN is memoized
+  * (NearDup: `tokens:<dir>` → `shingle_sets:<dir>` → `minhash_sigs:<dir>`,
+  * next to `term_freqs:<dir>`): each stage is a cached frame whose
+  * materialization is an eager job, and every caller re-planning and
+  * re-materializing the chain paid that job again even though the plan-
+  * keyed cache already held the blocks. The memo hands every caller in the
+  * epoch the one materialized frame.
+  *
+  * Threading: query execution is assumed SINGLE-THREADED (Bench, Verify
+  * and the benchmark run queries one after another). [[cachedRef]]
+  * builders that stage files — Formats' shared merge bases delete and
+  * rewrite a fixed scratch path — are safe only under that assumption:
+  * two concurrent builders of one key would race on the same directory,
+  * which the check-build-putIfAbsent scheme below does not prevent.
   */
 object Memo {
   private val m = new ConcurrentHashMap[(String, String), DataFrame]()
@@ -65,5 +82,5 @@ object Memo {
     }
   }
 
-  def clear(): Unit = { m.clear(); side.clear(); Sizing.clear() }
+  def clear(): Unit = { m.clear(); side.clear(); Sizing.clear(); Tables.clear() }
 }

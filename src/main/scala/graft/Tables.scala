@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table readers (TESTDATA.md / FIXTURES.md).
   *
@@ -19,10 +22,30 @@ import org.apache.spark.sql.functions._
   * Scale posture: each reader is a plain parquet scan, so Catalyst pushes
   * filters and prunes columns into the scan; at 100 TB these become
   * partitioned/bucketed reads with no code change here.
+  *
+  * Schema memo: a bare `spark.read.parquet` runs a one-task footer-reading
+  * job to infer the schema on EVERY call, and a near-dup / retrieval
+  * query reads the same fixture several times. The inferred `StructType`
+  * is therefore kept per (applicationId, path) and handed back through
+  * `spark.read.schema(..)`, so a table's schema is inferred once per
+  * epoch. [[Memo.clear]] empties it (like [[Sizing]]'s counts), so a
+  * table rewritten in place is re-inferred at the next epoch. Only the
+  * schema is shared, never a DataFrame: each call still builds a fresh
+  * relation, because two reads of one table joined to each other must
+  * stay two independent relations — a shared frame would turn every
+  * such join into an ambiguous self-join.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private val schemas = new ConcurrentHashMap[(String, String), StructType]()
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val schema = schemas.computeIfAbsent((spark.sparkContext.applicationId, path),
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  def clear(): Unit = schemas.clear()
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

@@ -329,7 +329,10 @@ object Formats {
     val allVs: org.apache.spark.sql.Column = array(vs.map(lit): _*)
     val vlist = exceptions.toSeq.sortBy(_._1).foldLeft(allVs) {
       case (acc, (m, vsCur)) =>
-        when(col("month") === m, array(vsCur.map(lit): _*)).otherwise(acc)
+        // typedLit: an empty vsCur (every requested version of the month
+        // is retained-served, possible when `vs` omits the current
+        // version) must still be array<bigint>, not an untyped array()
+        when(col("month") === m, typedLit(vsCur)).otherwise(acc)
     }
     val curLeg = current.select(
       (explode(vlist).as("v") +: cols.map(col)): _*)

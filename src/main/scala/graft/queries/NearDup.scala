@@ -62,20 +62,6 @@ object NearDup {
       s"list_transform(range(length($s)), j -> CAST(ascii($s[j+1]) AS BIGINT))), " +
       s"(h, c) -> (h * 31 + c) % 1000000007)"
 
-  /** documents → (doc_id, n_chars, toks, tokh): tokens + their char
-    * hashes, MATERIALIZED. Two reasons this must be its own cached stage,
-    * both measured at sf0.1:
-    *  - the fixture tables are single parquet files = one input split; the
-    *    repartition spreads the expensive hashing across the cluster (at
-    *    real scale the source is already many-splits);
-    *  - every downstream expression that references a DERIVED column gets
-    *    that column's expression INLINED by CollapseProject — the shingle
-    *    combine indexes tokh three times, so an un-materialized tokh would
-    *    re-run the full char-hash pipeline 3× per shingle (≈900× per doc;
-    *    this inlining turned a 3 s pipeline into 60 s). Materializing makes
-    *    tokh a real column, so references are array loads.
-    * Spark's cache manager keys on the logical plan, so all near-dup
-    * queries share one cache entry per stage. */
   /** Pure transform twin of [[tokens]]: adds `toks`/`tokh` to any frame
     * with a `text` column. Shared by the batch path and the incremental
     * (streaming) index builder so stream ≡ batch holds BY CONSTRUCTION —
@@ -84,11 +70,32 @@ object NearDup {
     docs.withColumn("toks", split(lower(trim(col("text"))), " "))
       .withColumn("tokh", expr("transform(toks, t -> poly_hash(t))"))
 
-  private[graft] def tokens(s: SparkSession, d: String): DataFrame = {
-    CosineSim.register(s) // poly_hash: the native form of polySql (same value)
-    materialized(tokensOf(spreadIfNarrow(s, Tables.documents(s, d)))
-      .select(col("doc_id"), col("n_chars"), col("toks"), col("tokh")))
-  }
+  /** documents → (doc_id, n_chars, toks, tokh): tokens + their char
+    * hashes, MATERIALIZED and Memo-served (`tokens:<dir>`). Why it is its
+    * own cached stage:
+    *  - the fixture tables are single parquet files = one input split; the
+    *    repartition spreads the hashing across the cluster (at real scale
+    *    the source is already many-splits — see [[spreadIfNarrow]]);
+    *  - it is the root of every text family (shingle sets, term
+    *    frequencies, substring windows, bigram sets, TextOps / Curation
+    *    counts): cached, the split + char hashing runs once per corpus
+    *    instead of once per consumer;
+    *  - CollapseProject INLINES a derived column's expression into every
+    *    reference to it, lambda bodies included. The native kernels read
+    *    `tokh` once per call, but consumers still reference the columns
+    *    repeatedly — substringWins reads `tokh` in three expressions, and
+    *    ngramPairs' bigram lambda reads `toks` once PER ELEMENT — so an
+    *    un-materialized stage would re-split / re-hash the text per
+    *    reference (measured before the native kernels: a 3 s pipeline
+    *    became 60 s). Materialized, references are array loads.
+    * The memo (not just the plan-keyed cache) matters because each
+    * [[materialized]] call is an eager job even when the blocks exist. */
+  private[graft] def tokens(s: SparkSession, d: String): DataFrame =
+    graft.Memo.cached(s.sparkContext.applicationId, s"tokens:$d") {
+      CosineSim.register(s) // poly_hash: the native form of polySql (same value)
+      materialized(tokensOf(spreadIfNarrow(s, Tables.documents(s, d)))
+        .select(col("doc_id"), col("n_chars"), col("toks"), col("tokh")))
+    }
 
   /** Repartition the corpus on `doc_id` ONLY when the scan yields fewer
     * splits than the cluster's parallelism. The fixture tables are single
@@ -210,15 +217,18 @@ object NearDup {
     * each shingle string) via the native `ngram_hashes`
     * (functions/NgramHashes.scala; with it the whole signature pipeline —
     * poly_hash → ngram_hashes → minhash_sigs/simhash_sig — is
-    * codegen-native). Materialized: `shl` is referenced inside the
-    * per-permutation / per-bit lambdas downstream (same inlining hazard). */
+    * codegen-native). Materialized and Memo-served (`shingle_sets:<dir>`):
+    * the MinHash index, ppjoin, novelty and the weighted-shingle index all
+    * read it. */
   /** Pure transform twin: (doc_id, tokh) → distinct 3-shingle hash set. */
   private[graft] def shingleSetsOf(toks: DataFrame): DataFrame =
     toks.select(col("doc_id"), expr("ngram_hashes(tokh, 3)").as("shl"))
       .filter(size(col("shl")) >= 2)
 
   private def shingleSets(s: SparkSession, d: String): DataFrame =
-    materialized(shingleSetsOf(tokens(s, d)))
+    graft.Memo.cached(s.sparkContext.applicationId, s"shingle_sets:$d") {
+      materialized(shingleSetsOf(tokens(s, d)))
+    }
 
   /** (doc_id, n_shingles, n_unique, novelty): fraction of a doc's
     * distinct shingles with corpus df = 1, off the shared cached shingle
@@ -240,20 +250,29 @@ object NearDup {
 
   /** cache() is lazy — a multi-branch plan over an unmaterialized cache
     * recomputes the subtree per branch (measured 51 s → 2 s at sf0.1).
-    * One count() materializes the signature table before the self-join
-    * fans out; this is the "build the index once" step, not a collect. */
-  private def materialized(df: DataFrame): DataFrame = { df.cache().count(); df }
+    * Materializing the signature table before the self-join fans out is
+    * the "build the index once" step, not a collect. It is ONE job: a
+    * write to the `noop` sink fills every cached partition, where a
+    * count() under AQE runs two (partial counts, then the final sum). */
+  private def materialized(df: DataFrame): DataFrame = {
+    df.cache().write.format("noop").mode("overwrite").save()
+    df
+  }
 
   /** (doc_id, shl, mh): 16 affine-permutation MinHash signatures over the
-    * shingle set, MATERIALIZED — the shared LSH index every near-dup
-    * variant's candidate generation reads. The native `minhash_sigs`
-    * (functions/MinHashSigs.scala) replaces the HOF
-    * `transform(sequence, p -> array_min(transform(shl, ...)))` form —
+    * shingle set, MATERIALIZED and Memo-served (`minhash_sigs:<dir>`) —
+    * the shared LSH index that every near-dup variant's candidate
+    * generation AND verify join read (bandCandidates and minhashPairs both
+    * call it). The native `minhash_sigs` (functions/MinHashSigs.scala)
+    * replaces the HOF `transform(sequence, p -> array_min(transform(shl,
+    * ...)))` form —
     * same values, one fused codegen'd loop instead of ~1000 interpreted
     * lambda frames per doc (the index build's hottest stage). */
-  private def minhashSigs(s: SparkSession, d: String): DataFrame =
-    materialized(shingleSets(s, d)
-      .withColumn("mh", expr("minhash_sigs(shl, 16)")))
+  private[graft] def minhashSigs(s: SparkSession, d: String): DataFrame =
+    graft.Memo.cached(s.sparkContext.applicationId, s"minhash_sigs:$d") {
+      materialized(shingleSets(s, d)
+        .withColumn("mh", expr("minhash_sigs(shl, 16)")))
+    }
 
   /** The full signature pipeline as ONE pure transform: any frame with
     * (doc_id, text) → (doc_id, shl, mh). This is what the incremental
@@ -738,7 +757,7 @@ object NearDup {
   private def termFreqs(s: SparkSession, d: String): DataFrame =
     // Memo (not just plan-keyed cache): the retrieval pipelines reference
     // this stage ~6× per action through corpusTf/queryTerms, and each
-    // materialized() CALL costs an eager count job even on warm cache —
+    // materialized() CALL costs an eager job even on warm cache —
     // the memo hands every caller the same DataFrame so the job runs
     // once per session per corpus (cleared between Bench passes).
     graft.Memo.cached(s.sparkContext.applicationId, s"term_freqs:$d") {

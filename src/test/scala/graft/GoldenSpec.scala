@@ -2499,7 +2499,6 @@ class GoldenSpec extends AnyFunSuite with SparkFixture {
     graft.queries.Formats.mergeCommit(spark, p,
       Seq((5L, "2024-02", 500L, "O", "I"), (4L, "2024-03", 450L, "O", "U"))
         .toDF("o_orderkey", "month", "cents", "o_orderstatus", "op"))
-    val vs = Seq(0L, 1L, 2L)
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df
       .select(col("v"), col("o_orderkey"), col("cents"),
         col("o_orderstatus"), col("month"))
@@ -2507,13 +2506,21 @@ class GoldenSpec extends AnyFunSuite with SparkFixture {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getString(3), r.getString(4)))
       .sorted.toSeq
-    val legs = vs.map(v =>
+    def legsOf(vs: Seq[Long]) = vs.map(v =>
         graft.queries.Formats.readAtVersion(spark, p, v)
           .withColumn("v", lit(v)))
       .reduce(_ unionByName _)
-    val multi = graft.queries.Formats.readAtVersions(spark, p, vs)
-    assert(rowsOf(multi) == rowsOf(legs),
+    val multi = graft.queries.Formats.readAtVersions(spark, p, Seq(0L, 1L, 2L))
+    assert(rowsOf(multi) == rowsOf(legsOf(Seq(0L, 1L, 2L))),
       "multi-version reader diverged from the per-version legs")
+    // a sweep that OMITS the current version (2): every requested version
+    // of 2024-02 and 2024-03 is retained-served, so their current rows
+    // explode over an EMPTY version list — it must be array<bigint> and
+    // emit nothing for those rows
+    val past = graft.queries.Formats.readAtVersions(spark, p, Seq(0L, 1L))
+    assert(rowsOf(past) == rowsOf(legsOf(Seq(0L, 1L))),
+      "multi-version reader diverged without the current version")
+    assert(past.schema("v").dataType == org.apache.spark.sql.types.LongType)
     // sanity on the interesting months: v0 serves 2024-02's ORIGINAL row
     // (g=1 copy), v1 serves it absent (fileless g=2 dir), v2 the reborn row
     val m02 = rowsOf(multi).filter(_._5 == "2024-02")
