@@ -68,11 +68,11 @@ object Tables {
     *   - anything else (TIMESTAMP_NTZ or TIMESTAMP) → already µs; a cast
     *     to TIMESTAMP_NTZ is a no-op for NTZ and pins the type otherwise.
     *
-    * `nanosAsLong` is REQUIRED at session build (Verify/Bench/TimeOne/
-    * Profile and the test fixture all set it) — the reader itself never
-    * mutates session conf. Against a NANOS fixture without the conf,
-    * Spark's own scan error names the flag; for the current µs fixtures
-    * the conf is simply unused.
+    * `nanosAsLong` is REQUIRED at session build (`graft.Session`, which
+    * the dev tools and the test fixture build on, sets it, and so do Bench
+    * and Verify) — the reader itself never mutates session conf. Against
+    * a NANOS fixture without the conf, Spark's own scan error names the
+    * flag; for the current µs fixtures the conf is simply unused.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = table(spark, sfDir, "events")

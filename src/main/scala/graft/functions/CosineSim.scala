@@ -113,11 +113,13 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  /** Idempotently registers the library's native functions (`cosine_sim`,
-    * `jaccard_sim`, `hyperplane_sig`, `poly_hash`, `minhash_sigs`,
-    * `simhash_sig`, `ngram_hashes`, `ngram_hashes_pos`, `pq_nearest`) so
-    * query code can use them via
-    * expr(...). Registration is guarded by a functionExists check:
+  /** The library's one native-function table: idempotently registers
+    * `cosine_sim`, `jaccard_sim`, `hyperplane_sig`, `poly_hash`,
+    * `minhash_sigs`, `simhash_sig`, `ngram_hashes`, `ngram_hashes_pos`,
+    * `ngram_hashes_pos_b`, `pq_nearest` and `cos_argmax` on the session,
+    * so query code can use them via expr(...). Every query that uses one
+    * calls this; no session conf installs them. Registration is guarded
+    * by a functionExists check:
     * createOrReplaceTempFunction logs a SimpleFunctionRegistry
     * "replaced a previously registered function" WARN on every re-call,
     * and per-query register() calls were spraying 7 WARNs × 177 queries

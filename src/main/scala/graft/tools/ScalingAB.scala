@@ -3,7 +3,6 @@ package graft.tools
 import graft.Tables
 import graft.functions.CosineSim
 import graft.queries.NearDup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,14 +30,8 @@ import org.apache.spark.sql.functions._
 object ScalingAB {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     CosineSim.register(spark)
     // same warmup as Bench so pass 1 isn't charged codegen classloading

@@ -324,6 +324,27 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("CosineSim.register installs all 11 native functions once; cosine_sim is correct") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = spark.sessionState.functionRegistry
+    val names = Seq("cosine_sim", "jaccard_sim", "hyperplane_sig", "poly_hash",
+      "minhash_sigs", "simhash_sig", "ngram_hashes", "ngram_hashes_pos",
+      "ngram_hashes_pos_b", "pq_nearest", "cos_argmax").map(FunctionIdentifier(_))
+    graft.functions.CosineSim.register(spark)
+    names.foreach(f => assert(reg.functionExists(f), s"$f not registered"))
+    val listed = reg.listFunction().toSet
+    val builders = names.map(reg.lookupFunctionBuilder(_).get)
+    graft.functions.CosineSim.register(spark)
+    assert(reg.listFunction().toSet == listed, "a second register changed the function list")
+    names.zip(builders).foreach { case (f, b) =>
+      assert(reg.lookupFunctionBuilder(f).get eq b, s"a second register replaced $f")
+    }
+    val r = Seq((Seq(3.0f, 4.0f), Seq(4.0f, 3.0f))).toDF("a", "b")
+      .select(expr("cosine_sim(a, b)")).as[Double].head()
+    assert(math.abs(r - 24.0 / 25.0) < 1e-12) // cos = (12+12)/(5*5)
+  }
+
   test("native pq_nearest ≡ the array_min(transform(...)) form it replaced") {
     // the PQ encode min-scan (LlmSimilarity.pqAssign): same FP
     // accumulation order (0D + ascending-index squared diffs), same
